@@ -1,17 +1,17 @@
-"""Lakehouse catalog adapter — flag-gated binding to a REAL Iceberg or
+"""Lakehouse catalog stage store — flag-gated binding to a REAL Iceberg or
 Delta catalog when the runtime carries one.
 
-The north-star names Iceberg tables as the checkpoint substrate. This repo
-implements the commit SEMANTICS (atomic snapshot publish, manifest with
-schema + file list, snapshot history / time travel / retention /
-compaction) on a bare filesystem in ``pipeline.Pipeline.stage`` — the
-sandbox has no lakehouse jars, so that protocol is the default and stays
-fully exercised by the crash-resume tests. This module is the missing
-binding for clusters that DO carry a catalog: set
-``PipelineConfig.table_format = "iceberg"`` (or ``"delta"``) and every
-stage checkpoint becomes a real catalog table write — atomicity, snapshot
-log, time travel, and expiry are then the engine's own, and the pipeline's
-resume/lineage contract is preserved on top of them via table properties.
+The north-star names Iceberg tables as the checkpoint substrate.
+``TableCatalog`` implements the stage-store interface of stagestore.py
+(``read`` / ``commit`` / ``snapshots`` / ``read_snapshot`` / ``expire`` /
+``compact``) over a real catalog, so ``pipeline.Pipeline`` runs unchanged
+on it: set ``PipelineConfig.table_format = "iceberg"`` (or ``"delta"``)
+and every stage checkpoint becomes a catalog table write — atomicity,
+snapshot log, time travel and expiry are then the engine's own, and the
+pipeline's resume/lineage contract rides on top of them in table
+properties. Lakehouse jars are optional, so the filesystem store
+(``stagestore.FileStageStore``, the same semantics on a bare filesystem)
+is the default and the one the crash-resume tests exercise.
 
 Availability is detected from the live SparkSession (no imports of any
 vendor package at module level); a format that is not wired into the
@@ -28,7 +28,11 @@ from __future__ import annotations
 import json
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .stagestore import snapshot_entry, stage_metrics
 
 
 class CatalogUnavailableError(RuntimeError):
@@ -92,7 +96,7 @@ def detect_catalogs(spark: SparkSession) -> dict:
 
 
 class TableCatalog:
-    """Stage-checkpoint reads/writes against a live Iceberg/Delta catalog.
+    """Stage store over a live Iceberg/Delta catalog.
 
     One instance per Pipeline; every method takes the STAGE name and maps
     it to ``<catalog>.<namespace>.<stage>`` (Iceberg) or
@@ -147,96 +151,113 @@ class TableCatalog:
         self.spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {ns}")
         self._ensured = True
 
-    # -- resume contract ---------------------------------------------------
-
-    def stage_key(self, stage: str) -> Optional[str]:
-        """The committed stage key, or None if the table doesn't exist."""
-        ident = self.identifier(stage)
+    def _properties(self, stage: str) -> Optional[dict]:
+        """The stage table's properties, or None iff the table does not
+        exist. Only table-not-found means "no checkpoint": a catalog
+        outage or a permission error propagates, or the recompute would
+        ``createOrReplace`` a good table."""
         try:
-            rows = self.spark.sql(f"SHOW TBLPROPERTIES {ident}").collect()
-        except Exception:
-            return None
-        props = {r["key"]: r["value"] for r in rows}
-        return props.get(self.KEY_PROP)
+            rows = self.spark.sql(
+                f"SHOW TBLPROPERTIES {self.identifier(stage)}"
+            ).collect()
+        except AnalysisException as e:
+            if e.getCondition() == "TABLE_OR_VIEW_NOT_FOUND":
+                return None
+            raise
+        return {r["key"]: r["value"] for r in rows}
 
-    def read_metrics(self, stage: str) -> Optional[dict]:
-        ident = self.identifier(stage)
-        try:
-            rows = self.spark.sql(f"SHOW TBLPROPERTIES {ident}").collect()
-        except Exception:
+    # -- the stage store interface (stagestore.py) ----------------------------
+
+    def read(self, stage: str, key: str) -> Optional[tuple[DataFrame, dict]]:
+        """Resume check: one property read yields both the committed key
+        and the metrics."""
+        props = self._properties(stage)
+        if props is None or props.get(self.KEY_PROP) != key:
             return None
-        props = {r["key"]: r["value"] for r in rows}
         raw = props.get(self.METRICS_PROP)
-        return json.loads(raw) if raw else None
+        metrics = json.loads(raw) if raw else {"stage": stage, "key": key}
+        return self.spark.read.table(self.identifier(stage)), metrics
 
-    # -- stage IO ----------------------------------------------------------
-
-    def write_stage(self, df: DataFrame, stage: str, key: str, metrics: dict):
+    def commit(
+        self, stage: str, key: str, df: DataFrame, t0: float
+    ) -> tuple[DataFrame, dict]:
         """Atomic replace of the stage table — the catalog's own snapshot
-        commit is the commit point (supersedes the filesystem rename
-        protocol). Properties carry the resume key + metrics."""
+        commit is the commit point (it supersedes the filesystem rename
+        protocol). The resume key rides in a table property and in the
+        snapshot's own metadata, so the snapshot log can say which key
+        wrote each snapshot."""
         self._ensure_namespace()
         ident = self.identifier(stage)
-        writer = (
-            df.writeTo(ident)
-            .tableProperty(self.KEY_PROP, key)
-            .tableProperty(self.METRICS_PROP, json.dumps(metrics))
-        )
-        if self.fmt == "delta":
-            writer = writer.using("delta")
+        writer = df.writeTo(ident).tableProperty(self.KEY_PROP, key)
+        if self.fmt == "iceberg":
+            writer = writer.option(f"snapshot-property.{self.KEY_PROP}", key)
+        else:
+            writer = writer.using("delta").option("userMetadata", key)
         writer.createOrReplace()
-
-    def read_stage(self, stage: str) -> DataFrame:
-        return self.spark.read.table(self.identifier(stage))
-
-    def set_metrics(self, stage: str, metrics: dict) -> None:
-        """Metadata-only follow-up commit attaching stage metrics. Kept
-        separate from write_stage so lineage can be computed on the
-        COMMITTED table (same read-back protocol as the filesystem path);
-        a crash between the two leaves a resumable table whose metrics
-        simply show the write-time snapshot."""
+        out = self.spark.read.table(ident)
+        # per-file lineage of the COMMITTED table (the engines keep no
+        # per-file row counts the filesystem footers would give us)
+        rows = {
+            r["file"]: int(r["n"])
+            for r in out.groupBy(F.input_file_name().alias("file"))
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        metrics = stage_metrics(stage, key, rows, t0)
+        # metadata-only follow-up commit: lineage exists only once the
+        # table is committed; a crash between the two leaves a resumable
+        # table whose metrics fall back to {stage, key}
         payload = json.dumps(metrics).replace("'", "''")
         self.spark.sql(
-            f"ALTER TABLE {self.identifier(stage)} SET TBLPROPERTIES "
+            f"ALTER TABLE {ident} SET TBLPROPERTIES "
             f"('{self.METRICS_PROP}' = '{payload}')"
         )
-
-    # -- snapshot history (the engine-native versions of pipeline.py's
-    #    _snapshots machinery) ---------------------------------------------
+        return out, metrics
 
     def snapshots(self, stage: str) -> list[dict]:
+        """The engine's snapshot log as :func:`stagestore.snapshot_entry`
+        dicts, ascending, the newest marked ``current``."""
         ident = self.identifier(stage)
         if self.fmt == "iceberg":
             rows = self.spark.sql(
-                f"SELECT snapshot_id, committed_at, operation "
+                f"SELECT snapshot_id, committed_at, summary "
                 f"FROM {ident}.snapshots ORDER BY committed_at"
             ).collect()
-            return [
-                {
-                    "snapshot_id": int(r["snapshot_id"]),
-                    "committed_at": str(r["committed_at"]),
-                    "operation": r["operation"],
-                }
+            out = [
+                snapshot_entry(
+                    r["snapshot_id"],
+                    str(r["committed_at"]),
+                    (r["summary"] or {}).get(self.KEY_PROP),
+                    _count((r["summary"] or {}).get("total-records")),
+                )
                 for r in rows
             ]
-        rows = self.spark.sql(f"DESCRIBE HISTORY {ident}").collect()
-        # DESCRIBE HISTORY returns newest-first; normalize to the same
-        # ascending chronological order as the Iceberg branch so
-        # snapshots()[0] is the oldest on both engines
-        return sorted(
-            (
-                {
-                    "snapshot_id": int(r["version"]),
-                    "committed_at": str(r["timestamp"]),
-                    "operation": r["operation"],
-                }
-                for r in rows
-            ),
-            key=lambda e: e["snapshot_id"],
-        )
+        else:
+            # DESCRIBE HISTORY is newest-first; the metrics property commit
+            # is data-identical to the version before it, not a snapshot
+            out = sorted(
+                (
+                    snapshot_entry(
+                        r["version"],
+                        str(r["timestamp"]),
+                        r["userMetadata"],
+                        _count((r["operationMetrics"] or {}).get("numOutputRows")),
+                    )
+                    for r in self.spark.sql(f"DESCRIBE HISTORY {ident}").collect()
+                    if r["operation"] != "SET TBLPROPERTIES"
+                ),
+                key=lambda e: e["snapshot_id"],
+            )
+        if out:
+            out[-1]["current"] = True
+        return out
 
-    def read_snapshot(self, stage: str, snapshot_id: int) -> DataFrame:
+    def read_snapshot(self, stage: str, snapshot_id: Optional[int] = None) -> DataFrame:
         ident = self.identifier(stage)
+        if snapshot_id is None:
+            if (self._properties(stage) or {}).get(self.KEY_PROP) is None:
+                raise LookupError(f"stage {stage!r} has no committed snapshot")
+            return self.spark.read.table(ident)
         if self.fmt == "iceberg":
             return (
                 self.spark.read.option("snapshot-id", snapshot_id)
@@ -248,10 +269,38 @@ class TableCatalog:
             .table(ident)
         )
 
+    def expire(self, stage: str, keep_last: int) -> list[int]:
+        """Count-based retention: Iceberg's retain_last maps directly;
+        Delta's retention is time-based only, so count-based expiry raises
+        with guidance instead of silently doing nothing. Returns [] — the
+        engine does not report which snapshot ids it dropped."""
+        if self.fmt != "iceberg":
+            raise NotImplementedError(
+                "Delta retention is time-based; use "
+                "TableCatalog.expire_snapshots(stage, older_than_hours) "
+                "(VACUUM) instead of count-based expiry"
+            )
+        # older_than defaults to now minus 5 days, which would make
+        # retain_last a no-op for every recent snapshot
+        self.spark.sql(
+            f"CALL {self.catalog}.system.expire_snapshots("
+            f"table => '{self.namespace}.{stage}', "
+            f"older_than => now(), "
+            f"retain_last => {int(keep_last) + 1})"  # +1: the live one
+        )
+        return []
+
+    def compact(self, stage: str, target_file_bytes: int) -> dict:
+        raise NotImplementedError(
+            "compact_stage is the filesystem store's maintenance pass; in "
+            "catalog mode use the engine's own — Iceberg rewrite_data_files "
+            f"/ Delta OPTIMIZE — on {self.identifier(stage)!r}"
+        )
+
     def expire_snapshots(self, stage: str, older_than: str) -> None:
-        """Engine-native retention: Iceberg expire_snapshots procedure /
-        Delta VACUUM. ``older_than`` is a SQL timestamp literal (Iceberg)
-        or retention-hours string (Delta)."""
+        """Engine-native time-based retention: Iceberg expire_snapshots
+        procedure / Delta VACUUM. ``older_than`` is a SQL timestamp literal
+        (Iceberg) or retention-hours string (Delta)."""
         ident = self.identifier(stage)
         if self.fmt == "iceberg":
             self.spark.sql(
@@ -262,20 +311,6 @@ class TableCatalog:
         else:
             self.spark.sql(f"VACUUM {ident} RETAIN {older_than} HOURS")
 
-    def expire_keep_last(self, stage: str, keep_last: int) -> None:
-        """Count-based retention (the Pipeline.expire_snapshots contract):
-        Iceberg's retain_last maps directly; Delta's retention is
-        time-based only, so count-based expiry raises with guidance
-        instead of silently doing nothing."""
-        if self.fmt == "iceberg":
-            self.spark.sql(
-                f"CALL {self.catalog}.system.expire_snapshots("
-                f"table => '{self.namespace}.{stage}', "
-                f"retain_last => {int(keep_last) + 1})"  # +1: the live one
-            )
-        else:
-            raise NotImplementedError(
-                "Delta retention is time-based; use "
-                "TableCatalog.expire_snapshots(stage, older_than_hours) "
-                "(VACUUM) instead of count-based expiry"
-            )
+
+def _count(v) -> Optional[int]:
+    return None if v is None else int(v)

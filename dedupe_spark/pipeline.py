@@ -1,30 +1,31 @@
 """Staged, checkpointed, resumable record-linkage pipeline (SURVEY.md §3/§7).
 
 ``ingest -> normalize -> block -> candidates -> score -> cluster -> assemble``,
-each stage a pure DataFrame -> DataFrame function that writes a parquet
-checkpoint plus a metrics JSON and can be resumed: a stage whose content key
-(hash of config + upstream keys) matches an existing COMMITTED checkpoint is
-read back instead of recomputed (north rule: "resumable from checkpoint with
-per-partition lineage + metrics"). Commits are atomic, Iceberg-style
-(VERDICT r3 item 2): the stage writes to a staging directory, fsyncs a
-manifest recording key + schema + the data-file list with sizes, and a
-POSIX rename publishes the snapshot — a crash at any point leaves either
-the previous committed snapshot or an unmanifested orphan that resume
-recomputes rather than trusts. A recommit supersedes rather than deletes:
-the previous snapshot moves under ``<workdir>/_snapshots/<stage>/<id>``
-and stays time-travel readable (``Pipeline.read_snapshot``/``snapshots``)
-until ``expire_snapshots`` reclaims it — the Iceberg snapshot-log
-semantics that let a 100 TB pipeline diff the effect of a config change
-without recomputing either side. On a cluster the format would be Iceberg
-proper: set ``PipelineConfig.table_format = "iceberg"`` (or ``"delta"``)
-and every stage commit goes through the real catalog binding in
-``catalog.TableCatalog`` instead (this sandbox carries no lakehouse jars,
-so the flag-off manifest-then-rename protocol keeps the same commit
-semantics on a plain filesystem and is the tested default).
+each stage a pure DataFrame -> DataFrame function whose output is a
+checkpoint that can be resumed: a stage whose content key (hash of the
+config fields it reads + upstream keys) matches the committed snapshot is
+read back instead of recomputed (north rule: "resumable from checkpoint
+with per-partition lineage + metrics"). Inputs only one stage reads are
+that stage's explicit parents (``threshold``/``refine`` for
+``cluster_assignments``), so changing them recomputes only downstream.
+
+Every checkpoint goes through ONE stage store (stagestore.py); ``Pipeline``
+never branches on storage format. The default ``FileStageStore`` commits
+Iceberg-style on a plain filesystem — manifest fsynced into a staging
+directory, then an atomic rename publishes it; a recommit supersedes the
+previous snapshot into time-travel history (``read_snapshot``/``snapshots``)
+until ``expire_snapshots`` reclaims it, the snapshot-log semantics that let
+a 100 TB pipeline diff the effect of a config change without recomputing
+either side. ``PipelineConfig.table_format = "iceberg"`` (or ``"delta"``)
+selects ``catalog.TableCatalog`` instead, the same interface over a real
+lakehouse catalog (lakehouse jars are optional, so the filesystem store is
+the default and the one the tests exercise). Stage metrics carry per-file
+lineage: ``partition_rows`` is rows per written data file, ``partitions``
+the number of data files.
 
 The reference's equivalent lifecycle is the monolithic
 ``find_duplicates_in_files`` control flow
-(/root/reference/backend/dedupe_script.py:173-419) — no checkpoints, driver
+(the reference's backend/dedupe_script.py:173-419) — no checkpoints, driver
 memory only, clusters truncated at 1,000-row chunk boundaries (§2.7). This
 pipeline clusters globally.
 """
@@ -34,9 +35,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 import time
-import uuid
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -51,6 +50,7 @@ from .operators import clustering as C
 from .operators import scoring as SC
 from .operators.assemble import assemble_clusters
 from .operators.scoring import FieldSpec, compute_features, feature_names
+from .stagestore import FileStageStore, open_store
 
 # ---------------------------------------------------------------------------
 # Page preparation: derived match fields (the reference matches on all input
@@ -252,8 +252,9 @@ class PipelineConfig:
     # block relation.
     adaptive_blocking: bool = False
     # "parquet" (default): the filesystem manifest-then-rename snapshot
-    # protocol below. "iceberg" | "delta": commit every stage checkpoint
-    # to a REAL lakehouse catalog table instead (catalog.TableCatalog) —
+    # protocol (stagestore.FileStageStore). "iceberg" | "delta": commit
+    # every stage checkpoint to a REAL lakehouse catalog table instead
+    # (catalog.TableCatalog, the same store interface) —
     # atomicity/snapshots/time-travel become the engine's own, the resume
     # key rides in table properties. Requires the catalog wired into the
     # SparkSession (fails fast at Pipeline construction with the
@@ -263,15 +264,16 @@ class PipelineConfig:
     catalog_namespace: str = "dedupe"
 
     def key_dict(self) -> dict:
+        # threshold and refine are absent on purpose: only
+        # cluster_assignments reads them, and it takes them as explicit
+        # parents — in every key they would recompute the upstream stages
         return {
-            "threshold": self.threshold,
             "max_block": self.max_block,
             "salt_target": self.salt_target,
             "id_col": self.id_col,
             "fields": [(f.name, f.type, f.has_missing) for f in self.fields],
             "l2": self.l2,
             "tfidf": self.tfidf,
-            "refine": self.refine,
             "extract_html": self.extract_html,
             "phonetic_blocking": self.phonetic_blocking,
             "adaptive_blocking": self.adaptive_blocking,
@@ -279,24 +281,18 @@ class PipelineConfig:
 
 
 class Pipeline:
-    """Runs the staged pipeline with parquet checkpoints + metrics JSON."""
+    """Runs the staged pipeline over one stage store (stagestore.py): each
+    stage either resumes from its committed checkpoint or computes and
+    commits one."""
+
+    MANIFEST = FileStageStore.MANIFEST
 
     def __init__(self, spark: SparkSession, config: PipelineConfig):
         self.spark = spark
         self.cfg = config
         os.makedirs(config.workdir, exist_ok=True)
         self.metrics: dict[str, dict] = {}
-        self.catalog = None
-        if config.table_format != "parquet":
-            from .catalog import TableCatalog
-
-            # fails fast (CatalogUnavailableError + spark-submit hint) if
-            # the session carries no such binding — never at first commit
-            self.catalog = TableCatalog(
-                spark, config.table_format, config.catalog_namespace
-            )
-
-    # -- checkpoint machinery ------------------------------------------------
+        self.store = open_store(spark, config)
 
     def _stage_key(self, name: str, parents: list[str]) -> str:
         payload = json.dumps(
@@ -305,146 +301,30 @@ class Pipeline:
         )
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
-    MANIFEST = "_dedupe_manifest.json"
-
-    def _read_committed_manifest(self, path: str, key: str) -> dict | None:
-        """Return the manifest iff ``path`` holds a COMMITTED checkpoint
-        for ``key``.
-
-        The manifest is written (and fsynced) inside the staging directory
-        BEFORE the atomic rename that publishes it, so its presence under
-        the final path IS the commit marker — an orphan parquet directory
-        left by a crash mid-write has no manifest and is recomputed, never
-        trusted (VERDICT r3 item 2: the old key-sidecar protocol could
-        leave a keyless/stale checkpoint that resume logic misjudged).
-        Validation: key equality, plus every data file the snapshot lists
-        still present with its recorded size (a partially deleted or
-        half-overwritten directory fails closed).
-        """
-        man = self._read_manifest(path)
-        if man is None or man.get("key") != key:
-            return None
-        return man
-
-    def _read_manifest(self, path: str) -> dict | None:
-        """Load + file-validate a snapshot manifest (no key check): every
-        data file the snapshot lists must still exist at its recorded
-        size, else the directory is not a trustable snapshot."""
-        try:
-            with open(os.path.join(path, self.MANIFEST)) as fh:
-                man = json.load(fh)
-        except (OSError, ValueError):
-            return None
-        for f in man.get("files", []):
-            fp = os.path.join(path, f["name"])
-            try:
-                if os.path.getsize(fp) != f["bytes"]:
-                    return None
-            except OSError:
-                return None
-        return man
-
     # -- snapshot history (Iceberg-style time travel) -------------------------
-
-    def _snap_dir(self, name: str) -> str:
-        return os.path.join(self.cfg.workdir, "_snapshots", name)
-
-    def _superseded_ids(self, name: str) -> list[int]:
-        try:
-            return sorted(
-                int(e) for e in os.listdir(self._snap_dir(name)) if e.isdigit()
-            )
-        except OSError:
-            return []
-
-    def _next_snapshot_id(self, name: str) -> int:
-        cur = self._read_manifest(os.path.join(self.cfg.workdir, name))
-        ids = self._superseded_ids(name)
-        if cur is not None:
-            ids.append(int(cur.get("snapshot_id", 0)))
-        return (max(ids) + 1) if ids else 1
 
     def snapshots(self, name: str) -> list[dict]:
         """Snapshot log for a stage, ascending by snapshot_id: superseded
-        snapshots still on disk plus the live committed one (marked
-        ``current``). Each entry carries the manifest's key, committed_at
-        and row count — enough to diff a config change's effect without
-        recomputing anything. In catalog mode (table_format iceberg/
-        delta) this is the engine's own snapshot log, same ordering."""
-        if self.catalog is not None:
-            snaps = self.catalog.snapshots(name)
-            for e in snaps:
-                e["current"] = False
-            if snaps:
-                snaps[-1]["current"] = True
-            return snaps
-        out = []
-        for sid in self._superseded_ids(name):
-            man = self._read_manifest(os.path.join(self._snap_dir(name), str(sid)))
-            if man is not None:
-                out.append(self._snap_entry(man, current=False))
-        cur = self._read_manifest(os.path.join(self.cfg.workdir, name))
-        if cur is not None:
-            out.append(self._snap_entry(cur, current=True))
-        return sorted(out, key=lambda e: e["snapshot_id"])
-
-    @staticmethod
-    def _snap_entry(man: dict, current: bool) -> dict:
-        return {
-            "snapshot_id": int(man.get("snapshot_id", 0)),
-            "committed_at": man.get("committed_at"),
-            "key": man.get("key"),
-            "rows": man.get("metrics", {}).get("rows"),
-            "current": current,
-        }
+        snapshots still kept plus the live committed one (marked
+        ``current``). Each entry carries snapshot_id, committed_at, key and
+        rows — enough to diff a config change's effect without recomputing
+        anything."""
+        return self.store.snapshots(name)
 
     def read_snapshot(self, name: str, snapshot_id: int | None = None) -> DataFrame:
         """Time-travel read: the stage's table as of ``snapshot_id``
         (default: the live committed snapshot). Raises ``LookupError`` if
-        the snapshot was never committed or has been expired. Catalog
-        mode delegates to the engine's time travel."""
-        if self.catalog is not None:
-            if snapshot_id is None:
-                if self.catalog.stage_key(name) is None:
-                    raise LookupError(
-                        f"stage {name!r} has no committed snapshot"
-                    )
-                return self.catalog.read_stage(name)
-            return self.catalog.read_snapshot(name, snapshot_id)
-        if snapshot_id is None:
-            path = os.path.join(self.cfg.workdir, name)
-            if self._read_manifest(path) is None:
-                raise LookupError(f"stage {name!r} has no committed snapshot")
-            return self.spark.read.parquet(path)
-        for path in (
-            os.path.join(self._snap_dir(name), str(snapshot_id)),
-            os.path.join(self.cfg.workdir, name),
-        ):
-            man = self._read_manifest(path)
-            if man is not None and int(man.get("snapshot_id", 0)) == snapshot_id:
-                return self.spark.read.parquet(path)
-        raise LookupError(
-            f"stage {name!r} snapshot {snapshot_id} not found (expired or never committed)"
-        )
+        the snapshot was never committed or has been expired."""
+        return self.store.read_snapshot(name, snapshot_id)
 
     def expire_snapshots(self, name: str, keep_last: int | None = None) -> list[int]:
         """Drop the oldest superseded snapshots beyond ``keep_last``
         (default: the config's snapshot_retention). The live committed
-        snapshot is never expired. Returns the expired ids (filesystem
-        mode) or [] after delegating to the engine's count-based expiry
-        (catalog mode — Iceberg retain_last; Delta raises, its retention
-        is time-based only)."""
+        snapshot is never expired. Returns the expired ids (the catalog
+        store delegates to the engine and returns []; Delta raises, its
+        retention is time-based only)."""
         keep = self.cfg.snapshot_retention if keep_last is None else keep_last
-        if self.catalog is not None:
-            self.catalog.expire_keep_last(name, keep)
-            return []
-        ids = self._superseded_ids(name)
-        victims = ids[: max(len(ids) - keep, 0)]
-        for sid in victims:
-            shutil.rmtree(
-                os.path.join(self._snap_dir(name), str(sid)), ignore_errors=True
-            )
-        return victims
+        return self.store.expire(name, keep)
 
     def compact_stage(
         self, name: str, target_file_bytes: int = 128 << 20
@@ -456,271 +336,36 @@ class Pipeline:
         downstream scan pays per-file open/footer cost and the
         NameNode/listing pays per-object cost).
 
-        The rewrite is ``coalesce`` (file merge), never a shuffle; the
-        manifest keeps the SAME stage key, so resume still matches, and
-        the previous snapshot moves into time-travel history exactly like
-        a recompute commit. Returns {files_before, files_after,
-        bytes_total, snapshot_id}.
+        The snapshot keeps the SAME stage key, so resume still matches,
+        and the previous snapshot moves into time-travel history exactly
+        like a recompute commit. Returns {files_before, files_after,
+        bytes_total, snapshot_id}. The catalog store raises: use the
+        engine's own (Iceberg rewrite_data_files / Delta OPTIMIZE).
         """
-        if self.catalog is not None:
-            raise NotImplementedError(
-                "compact_stage is the filesystem protocol's maintenance "
-                "pass; in catalog mode use the engine's own — Iceberg "
-                "rewrite_data_files / Delta OPTIMIZE — on "
-                f"{self.catalog.identifier(name)!r}"
-            )
-        path = os.path.join(self.cfg.workdir, name)
-        man = self._read_manifest(path)
-        if man is None:
-            raise LookupError(f"stage {name!r} has no committed snapshot")
-        files_before = len(man["files"])
-        bytes_total = sum(f["bytes"] for f in man["files"])
-        n_out = max(1, -(-bytes_total // max(1, target_file_bytes)))
-        df = self.spark.read.parquet(path)
-        tmp = path + f".compact-{uuid.uuid4().hex[:8]}"
-        try:
-            df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-            manifest = dict(man)
-            manifest["snapshot_id"] = self._next_snapshot_id(name)
-            manifest["committed_at"] = round(time.time(), 3)
-            manifest["compacted"] = True
-            # the metrics lineage must describe THIS layout, not the
-            # pre-compaction one (same per-partition accounting as a
-            # stage commit; row total must be unchanged by construction)
-            out = self.spark.read.parquet(tmp)
-            prows = {
-                str(r["pid"]): int(r["n"])
-                for r in out.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            m = dict(man.get("metrics") or {})
-            m["partitions"] = out.rdd.getNumPartitions()
-            m["partition_rows"] = prows
-            m["rows"] = sum(prows.values())
-            manifest["metrics"] = m
-            manifest["files"] = [
-                {
-                    "name": fn,
-                    "bytes": os.path.getsize(os.path.join(tmp, fn)),
-                }
-                for fn in sorted(os.listdir(tmp))
-                if fn.endswith(".parquet")
-            ]
-            mpath = os.path.join(tmp, self.MANIFEST)
-            with open(mpath, "w") as fh:
-                json.dump(manifest, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            self._fsync_path(tmp)
-            # same supersede-swap as a stage commit: previous snapshot
-            # stays time-travel readable until expired
-            snaps = self._snap_dir(name)
-            os.makedirs(snaps, exist_ok=True)
-            os.rename(
-                path, os.path.join(snaps, str(int(man.get("snapshot_id", 0))))
-            )
-            os.rename(tmp, path)
-            self.expire_snapshots(name)
-            self._fsync_path(self.cfg.workdir)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        self.spark.catalog.refreshByPath(path)
-        return {
-            "files_before": files_before,
-            "files_after": len(manifest["files"]),
-            "bytes_total": bytes_total,
-            "snapshot_id": manifest["snapshot_id"],
-        }
+        return self.store.compact(name, target_file_bytes)
 
-    @staticmethod
-    def _fsync_path(p: str) -> None:
-        try:
-            fd = os.open(p, os.O_RDONLY)
-            try:
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        except OSError:
-            pass
+    def stage(self, name: str, parents: list[str], compute) -> tuple[DataFrame, str]:
+        """Read the checkpoint if the store holds one committed under this
+        stage's key, else compute and commit atomically.
 
-    def _stage_catalog(self, name: str, key: str, compute) -> tuple[DataFrame, str]:
-        """Catalog-backed variant of :meth:`stage` (table_format iceberg/
-        delta): the lakehouse table replace IS the atomic commit (the
-        engine's own snapshot protocol supersedes the filesystem
-        manifest-then-rename), resume = stored ``dedupe.stage_key`` table
-        property matching this run's key, and the same read-back
-        per-partition lineage lands in a metadata-only property commit.
-        Snapshot history / time travel / retention go through
-        catalog.TableCatalog.snapshots/read_snapshot/expire_snapshots."""
-        from pyspark.sql import functions as _F
-
-        if self.catalog.stage_key(name) == key:
-            df = self.catalog.read_stage(name)
-            m = self.catalog.read_metrics(name) or {"stage": name, "key": key}
+        Returns (DataFrame, stage_key). Metrics: rows, partitions,
+        partition_rows, seconds, key — recorded with the snapshot
+        (authoritative) and mirrored to <workdir>/<name>.metrics.json for
+        observability.
+        """
+        key = self._stage_key(name, parents)
+        hit = self.store.read(name, key)
+        if hit is not None:
+            df, m = hit
             self.metrics[name] = m | {"resumed": True}
             return df, key
         t0 = time.time()
-        df = compute()
-        self.catalog.write_stage(
-            df, name, key, {"stage": name, "key": key, "resumed": False}
-        )
-        out = self.catalog.read_stage(name)
-        prows = {
-            str(r["pid"]): int(r["n"])
-            for r in out.groupBy(_F.spark_partition_id().alias("pid"))
-            .agg(_F.count("*").alias("n"))
-            .collect()
-        }
-        m = {
-            "stage": name,
-            "key": key,
-            "rows": sum(prows.values()),
-            "partitions": out.rdd.getNumPartitions(),
-            "partition_rows": prows,
-            "seconds": round(time.time() - t0, 3),
-            "resumed": False,
-        }
-        self.catalog.set_metrics(name, m)
-        self.metrics[name] = m
-        return out, key
-
-    def stage(self, name: str, parents: list[str], compute) -> tuple[DataFrame, str]:
-        """Read checkpoint if its committed manifest matches, else compute
-        and commit atomically (Iceberg-style snapshot semantics on a
-        filesystem: write-to-staging-dir, fsync a manifest that records
-        key + schema + the data-file list with sizes, then a rename is the
-        commit point — a crash at ANY intermediate step leaves either the
-        previous committed snapshot or an unmanifested orphan that resume
-        recomputes).
-
-        Returns (DataFrame, stage_key). Metrics: rows, partitions, seconds,
-        key — recorded in the manifest (authoritative) and mirrored to
-        <workdir>/<name>.metrics.json for observability.
-        """
-        key = self._stage_key(name, parents)
-        if self.catalog is not None:
-            return self._stage_catalog(name, key, compute)
-        path = os.path.join(self.cfg.workdir, name)
-        mfile = path + ".metrics.json"
-        # sweep leftovers from crashed commits (best-effort, never load-
-        # bearing: resume correctness comes from the manifest check alone)
-        base = os.path.basename(path)
-        for entry in os.listdir(self.cfg.workdir):
-            if (
-                entry.startswith(base + ".inprogress-")
-                or entry.startswith(base + ".old-")
-                or entry.startswith(base + ".compact-")
-            ):
-                shutil.rmtree(
-                    os.path.join(self.cfg.workdir, entry), ignore_errors=True
-                )
-        man = self._read_committed_manifest(path, key)
-        if man is not None:
-            df = self.spark.read.parquet(path)
-            self.metrics[name] = man["metrics"] | {"resumed": True}
-            return df, key
-        t0 = time.time()
-        df = compute()
-        tmp = path + f".inprogress-{uuid.uuid4().hex[:8]}"
-        try:
-            df.write.mode("overwrite").parquet(tmp)
-            out = self.spark.read.parquet(tmp)
-            # per-partition lineage (north_star: "checkpoint every stage
-            # ... with per-partition lineage and metrics"): row count per
-            # read-back partition of the written checkpoint — one aggregate
-            # job, same cost as the plain count it replaces, and it makes
-            # skew in a checkpointed stage visible in the metrics instead
-            # of only at the next shuffle
-            from pyspark.sql import functions as _F
-
-            prows = {
-                str(r["pid"]): int(r["n"])
-                for r in out.groupBy(_F.spark_partition_id().alias("pid"))
-                .agg(_F.count("*").alias("n"))
-                .collect()
-            }
-            m = {
-                "stage": name,
-                "key": key,
-                "rows": sum(prows.values()),
-                # scan partition count, INCLUDING empty ones (partition_rows
-                # only lists non-empty partitions — spark_partition_id rows
-                # can't witness an empty partition); read-back parquet scan,
-                # so the .rdd probe is contract-safe here (see _spread)
-                "partitions": out.rdd.getNumPartitions(),
-                "partition_rows": prows,
-                "seconds": round(time.time() - t0, 3),
-                "resumed": False,
-            }
-            manifest = {
-                "format_version": 2,
-                "snapshot_id": self._next_snapshot_id(name),
-                "committed_at": round(time.time(), 3),
-                "key": key,
-                "schema": out.schema.jsonValue(),
-                "files": [
-                    {
-                        "name": fn,
-                        "bytes": os.path.getsize(os.path.join(tmp, fn)),
-                    }
-                    for fn in sorted(os.listdir(tmp))
-                    if fn.endswith(".parquet")
-                ],
-                "metrics": m,
-            }
-            mpath = os.path.join(tmp, self.MANIFEST)
-            with open(mpath, "w") as fh:
-                json.dump(manifest, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            self._fsync_path(tmp)
-            # commit point: rename the fully-written, manifested staging
-            # dir into place. POSIX rename is atomic; the two-rename swap
-            # (old out, new in) has one non-atomic seam, and a crash inside
-            # it leaves `path` ABSENT — which the manifest check reads as
-            # "recompute", never as a trustable checkpoint
-            if os.path.exists(path):
-                old_man = self._read_manifest(path)
-                if old_man is not None and self.cfg.snapshot_retention > 0:
-                    # supersede, don't delete: the previous snapshot moves
-                    # (one atomic rename) into the history area under its
-                    # own snapshot_id — time-travel readable until expired
-                    snaps = self._snap_dir(name)
-                    os.makedirs(snaps, exist_ok=True)
-                    os.rename(
-                        path,
-                        os.path.join(
-                            snaps, str(int(old_man.get("snapshot_id", 0)))
-                        ),
-                    )
-                    os.rename(tmp, path)
-                    self.expire_snapshots(name)
-                else:
-                    old = path + f".old-{uuid.uuid4().hex[:8]}"
-                    os.rename(path, old)
-                    os.rename(tmp, path)
-                    shutil.rmtree(old, ignore_errors=True)
-            else:
-                os.rename(tmp, path)
-            self._fsync_path(self.cfg.workdir)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
+        df, m = self.store.commit(name, key, compute(), t0)
         # observability mirror only — resume never trusts it
-        with open(mfile, "w") as fh:
+        with open(os.path.join(self.cfg.workdir, name + ".metrics.json"), "w") as fh:
             json.dump(m, fh)
         self.metrics[name] = m
-        # the rename swap changed `path`'s contents BEHIND Spark's back
-        # (a direct overwrite write would have invalidated the session's
-        # FileStatusCache; a filesystem rename does not) — refresh, or a
-        # prior read of this path in the same session serves a stale file
-        # listing and the next scan dies on FILE_NOT_EXIST
-        self.spark.catalog.refreshByPath(path)
-        # re-point the returned frame at the committed location (the
-        # pre-rename `out` plan still references the staging path)
-        return self.spark.read.parquet(path), key
+        return df, key
 
     # -- end-to-end ----------------------------------------------------------
 

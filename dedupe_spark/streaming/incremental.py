@@ -686,15 +686,10 @@ def streaming_er_assign(
     rtype = assignments.schema["record_id"].dataType
     ctype = assignments.schema["cluster_id"].dataType
 
-    def _read(path: str, schema: StructType) -> DataFrame:
-        # a run whose every epoch wrote zero rows leaves no parquet footer
-        # to infer from (partitioned writes skip empty partitions) — fall
-        # back to an empty frame with the operator's known schema
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            return spark.createDataFrame([], schema)
-
+    # a run whose every epoch wrote zero rows leaves no parquet footer to
+    # infer from (partitioned writes skip empty partitions):
+    # read_epoch_sink maps exactly that to an empty frame with the
+    # operator's known schema, and lets a corrupt sink propagate
     a_schema = StructType(
         [
             StructField("record_id", rtype),
@@ -712,8 +707,8 @@ def streaming_er_assign(
         ]
     )
     return {
-        "assignments": _read(a_dir, a_schema),
-        "merge_hints": _read(h_dir, h_schema),
+        "assignments": read_epoch_sink(spark, a_dir, a_schema),
+        "merge_hints": read_epoch_sink(spark, h_dir, h_schema),
     }
 
 

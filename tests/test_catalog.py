@@ -9,7 +9,9 @@ catalog (it runs automatically the day the jars appear).
 
 from __future__ import annotations
 
+import json
 import tempfile
+from types import SimpleNamespace
 
 import pytest
 
@@ -71,15 +73,17 @@ def test_table_format_not_in_stage_key(spark):
 
 def test_default_parquet_protocol_unaffected(spark):
     """With the default table_format the Pipeline takes the filesystem
-    manifest path: catalog is None and a stage commits + resumes exactly
+    manifest store and a stage commits + resumes exactly
     as before the adapter existed."""
     from pyspark.sql import functions as F
 
     from dedupe_spark.pipeline import Pipeline, PipelineConfig
 
+    from dedupe_spark.stagestore import FileStageStore
+
     wd = tempfile.mkdtemp()
     p = Pipeline(spark, PipelineConfig(workdir=wd))
-    assert p.catalog is None
+    assert isinstance(p.store, FileStageStore)
     df = spark.range(10).withColumn("v", F.col("id") * 2)
     out, key = p.stage("unit_stage", [], lambda: df)
     assert out.count() == 10
@@ -116,7 +120,148 @@ def test_live_catalog_stage_roundtrip(spark):
     assert out.count() == 100
     out2, key2 = p.stage("cat_stage", [], lambda: df)
     assert key2 == key and p.metrics["cat_stage"]["resumed"] is True
-    snaps = p.catalog.snapshots("cat_stage")
+    snaps = p.snapshots("cat_stage")
     assert len(snaps) >= 1
-    tt = p.catalog.read_snapshot("cat_stage", snaps[0]["snapshot_id"])
+    tt = p.read_snapshot("cat_stage", snaps[0]["snapshot_id"])
     assert tt.count() == 100
+
+
+# ---------------------------------------------------------------------------
+# Catalog store contract without lakehouse jars: a recording fake session
+# stands in for the catalog, detect_catalogs is monkeypatched to report one.
+# ---------------------------------------------------------------------------
+
+
+class _RecordingSession:
+    """Records every SQL statement; answers the first matching prefix with
+    its canned rows, or raises it when the answer is an exception."""
+
+    def __init__(self, answers: dict):
+        self.answers = answers
+        self.sql_log: list[str] = []
+        self.read = SimpleNamespace(table=lambda ident: ("table", ident))
+
+    def sql(self, query: str):
+        self.sql_log.append(query)
+        for prefix, ans in self.answers.items():
+            if query.startswith(prefix):
+                if isinstance(ans, BaseException):
+                    raise ans
+                return SimpleNamespace(collect=lambda ans=ans: ans)
+        return SimpleNamespace(collect=lambda: [])
+
+
+def _catalog_pipeline(monkeypatch, tmp_path, fmt, answers):
+    import dedupe_spark.catalog as catalog_mod
+    from dedupe_spark.pipeline import Pipeline, PipelineConfig
+
+    monkeypatch.setattr(
+        catalog_mod, "detect_catalogs", lambda s: {"iceberg": ["lake"], "delta": True}
+    )
+    fake = _RecordingSession(answers)
+    cfg = PipelineConfig(workdir=str(tmp_path / fmt), table_format=fmt)
+    return Pipeline(fake, cfg), fake
+
+
+def _analysis_error(spark, query):
+    from pyspark.errors import AnalysisException
+
+    try:
+        spark.sql(query).collect()
+    except AnalysisException as e:
+        return e
+    raise AssertionError(f"{query!r} did not fail analysis")
+
+
+def test_catalog_resume_only_table_not_found_reads_as_absent(
+    spark, monkeypatch, tmp_path
+):
+    """The resume check maps ONLY table-not-found to "no checkpoint". A
+    permission-style analysis error or a catalog outage propagates before
+    anything is recomputed — a recompute would createOrReplace a good
+    table. A key match costs exactly one property read."""
+    from pyspark.errors import AnalysisException
+
+    not_found = _analysis_error(spark, "SHOW TBLPROPERTIES no_such_ns.no_such_tbl")
+    denied = _analysis_error(spark, "SELECT no_such_column FROM range(1)")
+    assert not_found.getCondition() == "TABLE_OR_VIEW_NOT_FOUND"
+
+    p, _ = _catalog_pipeline(
+        monkeypatch, tmp_path, "iceberg", {"SHOW TBLPROPERTIES": not_found}
+    )
+    assert p.store.read("records", "k") is None
+
+    def _never():
+        raise AssertionError("recomputed over a failed resume check")
+
+    for err, kind in ((denied, AnalysisException),
+                      (ConnectionError("catalog unreachable"), ConnectionError)):
+        p, _ = _catalog_pipeline(
+            monkeypatch, tmp_path, "iceberg", {"SHOW TBLPROPERTIES": err}
+        )
+        with pytest.raises(kind):
+            p.stage("records", [], _never)
+
+    p, fake = _catalog_pipeline(monkeypatch, tmp_path, "iceberg", {})
+    key = p._stage_key("records", [])
+    fake.answers["SHOW TBLPROPERTIES"] = [
+        {"key": TableCatalog.KEY_PROP, "value": key},
+        {"key": TableCatalog.METRICS_PROP,
+         "value": json.dumps({"stage": "records", "key": key, "rows": 7})},
+    ]
+    df, got = p.stage("records", [], _never)
+    assert got == key and df == ("table", "lake.dedupe.records")
+    assert p.metrics["records"] == {
+        "stage": "records", "key": key, "rows": 7, "resumed": True
+    }
+    assert sum(q.startswith("SHOW TBLPROPERTIES") for q in fake.sql_log) == 1
+
+
+def test_catalog_snapshots_and_expiry_match_filesystem_contract(
+    spark, monkeypatch, tmp_path
+):
+    """Catalog-mode snapshots() entries carry the filesystem entry keys
+    (ascending, newest current); Iceberg count-based expiry passes
+    older_than => now() so retain_last is not a silent no-op; Delta
+    count-based expiry raises."""
+    from dedupe_spark.pipeline import Pipeline, PipelineConfig
+
+    fs = Pipeline(spark, PipelineConfig(workdir=str(tmp_path / "fs")))
+    fs.stage("s", [], lambda: spark.range(3))
+    keys = set(fs.snapshots("s")[0])
+    assert keys == {"snapshot_id", "committed_at", "key", "rows", "current"}
+    want = [(11, "a", 3, False), (12, "b", 5, True)]
+
+    ice, ice_sql = _catalog_pipeline(monkeypatch, tmp_path, "iceberg", {
+        "SELECT snapshot_id": [
+            {"snapshot_id": 11, "committed_at": "2026-01-01 00:00:00",
+             "summary": {TableCatalog.KEY_PROP: "a", "total-records": "3"}},
+            {"snapshot_id": 12, "committed_at": "2026-01-02 00:00:00",
+             "summary": {TableCatalog.KEY_PROP: "b", "total-records": "5"}},
+        ]
+    })
+    log = ice.snapshots("s")
+    assert [set(e) for e in log] == [keys, keys]
+    assert [(e["snapshot_id"], e["key"], e["rows"], e["current"]) for e in log] == want
+    assert ice.expire_snapshots("s", keep_last=1) == []
+    (call,) = [q for q in ice_sql.sql_log if "expire_snapshots" in q]
+    assert "older_than => now()" in call and "retain_last => 2" in call
+
+    rtas = "CREATE OR REPLACE TABLE AS SELECT"
+    history = [  # DESCRIBE HISTORY order: newest first
+        {"version": 13, "timestamp": "t3", "operation": "SET TBLPROPERTIES",
+         "userMetadata": None, "operationMetrics": {}},
+        {"version": 12, "timestamp": "t2", "operation": rtas,
+         "userMetadata": "b", "operationMetrics": {"numOutputRows": "5"}},
+        {"version": 11, "timestamp": "t1", "operation": rtas,
+         "userMetadata": "a", "operationMetrics": {"numOutputRows": "3"}},
+    ]
+    delta, delta_sql = _catalog_pipeline(
+        monkeypatch, tmp_path, "delta", {"DESCRIBE HISTORY": history}
+    )
+    log = delta.snapshots("s")
+    assert [set(e) for e in log] == [keys, keys]
+    assert [(e["snapshot_id"], e["key"], e["rows"], e["current"]) for e in log] == want
+    with pytest.raises(NotImplementedError):
+        delta.expire_snapshots("s", keep_last=1)
+    assert not any("expire_snapshots" in q for q in delta_sql.sql_log)

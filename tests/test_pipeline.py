@@ -98,6 +98,9 @@ def test_config_change_invalidates(run, corpus, spark):
     pl3 = Pipeline(spark, PipelineConfig(workdir=wd, threshold=0.7))
     out3 = pl3.run(pages, lab)
     assert pl3.metrics["cluster_assignments"]["resumed"] is False
+    # threshold is read only by cluster_assignments: upstream resumes
+    for stage in ("records", "blocks", "candidate_pairs", "scored_pairs"):
+        assert pl3.metrics[stage]["resumed"] is True, stage
 
 
 def test_dedupe_parity_comparators_f1(spark, corpus, tmp_path_factory):

@@ -676,3 +676,32 @@ def test_streaming_sink_read_error_contract(spark, tmp_path):
     assert "PATH_NOT_FOUND" not in msg
     assert "Path does not exist" not in msg
     assert "UNABLE_TO_INFER_SCHEMA" not in msg  # third eaten class
+
+    # (c) streaming_er_assign returns its sinks through the same handler:
+    # a corrupt summary file in the assignments sink (read first by schema
+    # inference) must propagate, not report zero assignments
+    from dedupe_spark.streaming.incremental import streaming_er_assign
+
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+    corpus = spark.createDataFrame([("c1", text)], "doc_id string, text string")
+    arrivals = tmp_path / "arrivals"
+    spark.createDataFrame([("n1", text)], "doc_id string, text string").write.parquet(
+        str(arrivals)
+    )
+    standing = spark.createDataFrame(
+        [("c1", "c1")], "record_id string, cluster_id string"
+    )
+    out_dir = tmp_path / "er_out"
+    (out_dir / "assignments").mkdir(parents=True)
+    (out_dir / "assignments" / "_common_metadata").write_bytes(b"not parquet")
+    with pytest.raises(Exception) as ei:
+        streaming_er_assign(
+            spark,
+            spark.readStream.schema("doc_id string, text string").parquet(
+                str(arrivals)
+            ),
+            corpus,
+            standing,
+            str(out_dir),
+        )["assignments"].collect()
+    assert "UNABLE_TO_INFER_SCHEMA" not in str(ei.value)
