@@ -31,6 +31,7 @@ import time
 from pyspark.sql import functions as F
 
 from dedupe_spark.lifecycle import release_session_storage
+from dedupe_spark.session import box_resources
 
 
 def build_spark(cpus: int):
@@ -88,7 +89,7 @@ def scoring_workload(spark, sf_dir: str):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, _ = box_resources()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = build_spark(cpus)
 

@@ -20,6 +20,57 @@ from pyspark.sql import SparkSession
 # worker — comfortable headroom on standard 4-8 GB/core executors.
 ARROW_BATCH = 30_000
 
+MEMINFO = "/proc/meminfo"
+
+# where the driver imported this package from: a checkout, an install or
+# the --py-files zip (session.py is <root>/dedupe_spark/session.py)
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def box_resources() -> tuple[int, str | None]:
+    """(cpus, driver memory) defaults taken from the machine.
+
+    CPUs are the ones in this process's affinity mask (what ``nproc``
+    prints), or ``os.cpu_count()`` where the OS has no affinity call; the
+    driver heap is half of ``MemTotal`` in whole GiB, at least 1g, or None
+    (Spark's own default) where there is no ``/proc/meminfo``.
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` win when set.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus:
+        n = int(cpus)
+    elif hasattr(os, "sched_getaffinity"):
+        n = len(os.sched_getaffinity(0))
+    else:
+        n = os.cpu_count() or 1
+    mem = os.environ.get("SPARK_DRIVER_MEM") or None
+    if mem is None and os.path.exists(MEMINFO):
+        with open(MEMINFO) as fh:
+            kib = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+        mem = f"{max(1, kib // (2 * 1024 * 1024))}g"
+    return n, mem
+
+
+def worker_daemon_conf(master: str) -> dict[str, str]:
+    """Confs that fork every Python worker from ``dedupe_spark._daemon``.
+
+    Only for local masters (``local``, ``local[N]``, ``local-cluster[...]``),
+    whose workers share the driver's filesystem: the daemon is imported
+    before any task ships ``--py-files``, so the workers get the driver's
+    package location on ``PYTHONPATH``. That path means nothing on a
+    remote executor (and on YARN it would replace the ``PYTHONPATH`` the
+    client fills with the shipped files), so any other master, including
+    ``"cluster"``, keeps Spark's default daemon.
+    """
+    if not master.startswith("local"):
+        return {}
+    return {
+        "spark.python.daemon.module": "dedupe_spark._daemon",
+        "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
+    }
+
 
 def get_spark(
     app_name: str = "dedupe_spark",
@@ -29,10 +80,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) in the
-    sandbox; on a real cluster pass ``None`` and let spark-submit decide.
+    master defaults to ``local[cpus]`` with cpus from ``box_resources``;
+    on a real cluster pass ``"cluster"`` and let spark-submit decide.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_mem = box_resources()
     if master is None:
         master = f"local[{cpus}]"
     # Parse parallelism out of local[N] for shuffle sizing; on a cluster you
@@ -62,16 +113,11 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # fresh Python worker per task: reused workers accumulate allocator
         # state across Arrow-UDF stages and measurably degrade (2-4x) over a
-        # long session; startup (~100ms) amortizes over our batch sizes.
-        # SPARK_GRAFT_WORKER_REUSE=true overrides for single-pipeline runs
-        # (bench A/B, scaling children) where aging can't accumulate
-        .config(
-            "spark.python.worker.reuse",
-            os.environ.get("SPARK_GRAFT_WORKER_REUSE", "false"),
-        )
-        # local[N] runs all executor threads inside the driver JVM — size the
-        # heap for N concurrent tasks' shuffle + cache blocks or GC dominates
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # long session. A fresh worker used to pay ~0.5-0.9 s of imports
+        # (pandas, pyarrow, the kernels); _daemon pays them once per
+        # executor (worker_daemon_conf, local masters) and forks each task's
+        # fresh worker from that warm process
+        .config("spark.python.worker.reuse", "false")
         # batch engine, no latency SLO: the throughput collector beats G1's
         # pause-bounded collection at width 32 (~5% on the scoring stage,
         # measured via A/B on the scaling workload)
@@ -79,7 +125,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = worker_daemon_conf(master)
+    # local[N] runs all executor threads inside the driver JVM — size the
+    # heap for N concurrent tasks' shuffle + cache blocks or GC dominates
+    if driver_mem:
+        conf["spark.driver.memory"] = driver_mem
+    for k, v in {**conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
